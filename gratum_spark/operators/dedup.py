@@ -288,6 +288,12 @@ def minhash_verified_pairs(
     equals the full exact enumeration — which is what makes this
     hash-based plan oracle-checkable — while scaling as candidates,
     not pairs.
+
+    Calling this runs the LSH candidate phase EAGERLY: the candidate
+    pair set is materialized with an eager ``localCheckpoint`` while
+    the plan is built (it feeds both the verify-side id prune and the
+    verify join), so building the returned DataFrame launches Spark
+    jobs; only the exact verify is left lazy.
     Returns (a, b, jaccard) with exact jaccard >= threshold.
     """
     if bands is None:
@@ -365,6 +371,11 @@ def minhash_verified_pairs_cross(
     are distinct; a doc appearing in both sides pairs with itself at
     jaccard 1.0, which is exactly what an incremental pipeline wants to
     catch).
+
+    Like :func:`minhash_verified_pairs`, calling this runs the LSH
+    candidate phase EAGERLY: the new x corpus candidate pairs are
+    materialized with an eager ``localCheckpoint`` while the plan is
+    built, so building the returned DataFrame launches Spark jobs.
     """
     if bands is None:
         bands, _ = derive_banding(n_hashes, threshold)
@@ -1149,7 +1160,7 @@ def _duplicate_span_ranges(
     a single-machine algorithm, the distributed shape is overlapping
     k-shingles + one corpus-wide count + gaps-and-islands:
 
-      posexplode k-shingles (start positions 0..n-k, expression-only)
+      posexplode k-shingles (start positions 0..n-k), materialized
         -> groupBy shingle, count(*) >= 2      (map-side combinable)
         -> join hits back on shingle            (co-partitioned: the
            dup side just aggregated on the same key)
@@ -1161,9 +1172,19 @@ def _duplicate_span_ranges(
 
     Three shuffles total, nothing pairwise, no all-pairs joins; the
     only corpus-sized key space is the shingle groupBy, which partial
-    aggregation collapses before the exchange. Returns one row per
-    maximal span: (id, span_start, span_end) in token positions,
-    end inclusive.
+    aggregation collapses before the exchange.
+
+    The position index (id, pos, shingle) is MATERIALIZED when the plan
+    is built — an eager localCheckpoint, so building runs a Spark job —
+    because both the count and the join read it. Its storage is about
+    one k-word row per corpus token (n - k + 1 rows for an n-token doc,
+    each holding k words), i.e. roughly k times the corpus text, held in
+    executor-local blocks that are not replayable after executor loss
+    (for a replayable cut, set a checkpoint dir and use ``.checkpoint()``
+    instead, as in graph.py).
+
+    Returns one row per maximal span: (id, span_start, span_end) in
+    token positions, end inclusive.
     """
     if n_partitions:
         # shingling is the CPU-heavy stage; when the input arrives in

@@ -276,7 +276,12 @@ def dsir_logratios(
     slice of my corpus" setup): the target model is then derived from
     the source feature table by a semi join on id (identical counts —
     per-doc bucket counts are exact partials), skipping the second
-    tokenize+hash pass over the target corpus entirely.
+    tokenize+hash pass over the target corpus entirely. PRECONDITION
+    (not validated — checking it would cost the pass this skips): ids
+    must be UNIQUE in both ``source`` and ``target``. A duplicated
+    source id adds every source row under that id to the target model,
+    and a duplicated target id is counted once instead of per row, so
+    either silently skews the target counts.
     """
     B = 16 ** prefix_len
     if n_partitions:

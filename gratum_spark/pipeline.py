@@ -30,6 +30,7 @@ import re
 import time
 import warnings
 from collections.abc import Callable, Iterable, Mapping
+from dataclasses import dataclass
 from typing import Any
 
 import pandas as pd
@@ -1368,15 +1369,14 @@ class Pipeline:
         # post-save result pipelines report the PARENT's loaded count
         # (reference: save() result rows are DO_NOT_TRACK,
         # Pipeline.groovy:833-844; asserted by PipelineTest.testSave).
-        # File saves capture the count from an Observation attached to
-        # the write itself (no second execution of the parent plan) into
-        # _loaded_override; the Sink SPI path (arbitrary user attach())
-        # keeps a DataFrame to count at go(). NEITHER survives _next —
+        # File saves count the written rows and the rejects in the write
+        # itself (no second execution of the parent plan) into _tally;
+        # the Sink SPI path (arbitrary user attach()) keeps the parent
+        # pipeline to count at go(). NEITHER survives _next —
         # any operator applied to a result pipeline counts its own rows
         # (p.save(x).filter(...).go() reports the filtered count, not
         # the parent's).
-        self._count_source: DataFrame | None = None
-        self._loaded_override: int | None = None
+        self._count_source: "Pipeline | None" = None
         # Driver-measured size estimate for collection-backed sources
         # (bytes). Catalyst reports the unknown sentinel for RDD-backed
         # plans (createDataFrame from Python rows = LogicalRDD), so
@@ -1389,9 +1389,21 @@ class Pipeline:
         # side falls to AQE.
         self._size_hint_bytes: int | None = None
         # (step name, float accumulator) per Python-closure step — go()
-        # snapshots these into LoadStatistic.step_timings (approximate;
-        # see LoadStatistic docstring)
+        # snapshots these into LoadStatistic.step_timings (see the
+        # LoadStatistic docstring)
         self._step_timers: list[tuple[str, Any]] = []
+        # Reject accounting (see _accounted). _anchor: the latest pipeline
+        # of this chain made by an operator that can stop, skip or hide
+        # the reading of its input (a barrier: limit, join, persist, ...);
+        # the accounted replay starts from it. _barrier marks such an
+        # operator's output until the recording wrapper reads it. _acct is
+        # set only along an accounted replay: (Observation, step, reject
+        # branches) for every reject step counted on the kept path.
+        # _tally holds what a file save's write already counted.
+        self._anchor: "Pipeline | None" = None
+        self._barrier = False
+        self._acct: list[tuple[Any, str, list[DataFrame]]] | None = None
+        self._tally: _Tally | None = None
 
     # ------------------------------------------------------------------ infra
 
@@ -1400,6 +1412,7 @@ class Pipeline:
         df: DataFrame,
         rejects: list[DataFrame] | None = None,
         keep_size_hint: bool = False,
+        barrier: bool = False,
     ) -> "Pipeline":
         out = Pipeline(
             df,
@@ -1408,6 +1421,8 @@ class Pipeline:
             {k: list(v) for k, v in self._hooks.items()},
         )
         out._step_timers = list(self._step_timers)
+        out._acct = self._acct
+        out._barrier = barrier
         if keep_size_hint:
             # The caller guarantees its kept output is no larger than its
             # input (row subset / column subset / value-shrinking cast),
@@ -1431,14 +1446,46 @@ class Pipeline:
         """Split plan into kept rows and a tagged reject branch.
 
         The reject branch shares the scan subtree; Catalyst pushes the
-        negated predicate down independently, so the reject count at
-        ``go()`` reads only what it must (column-pruned, filter-pushed).
+        negated predicate down independently. On an accounted replay the
+        predicate becomes a column first, so a closure predicate runs
+        once per row for both the kept filter and the reject count.
         """
-        kept = self.df.filter(keep)
         rejected = tag_rejects(
             self.df.filter(~F.coalesce(keep, F.lit(False))), category, reason, step
         )
+        if self._acct is None:
+            kept = self.df.filter(keep)
+        else:
+            bad = ~F.coalesce(F.col("__keep__"), F.lit(False))
+            kept = (
+                self._observe(self.df.withColumn("__keep__", keep), step,
+                              {category.value: bad}, [rejected])
+                .filter(F.col("__keep__"))
+                .drop("__keep__")
+            )
         return self._next(kept, [rejected], keep_size_hint=True)
+
+    def _observe(
+        self,
+        marked: DataFrame,
+        step: str,
+        bad: Mapping[str, Column],
+        rejects: list[DataFrame],
+    ) -> DataFrame:
+        """On an accounted replay, count each reject category of ``step``
+        (``bad``: category -> flag over ``marked``) on the kept path, and
+        register the step's reject branches as counted; otherwise return
+        ``marked`` unchanged, so ``p.df`` plans keep their pushdowns (a
+        CollectMetrics node blocks filter pushdown through it)."""
+        if self._acct is None:
+            return marked
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        self._acct.append((obs, step, rejects))
+        return marked.observe(
+            obs, *[F.count_if(flag).alias(cat) for cat, flag in bad.items()]
+        )
 
     @property
     def spark(self):
@@ -1589,18 +1636,29 @@ class Pipeline:
             "__p__",
             _pred(F.struct(*cols, *_nan_flag_cols(self.df, cols))),
         )
-        kept = marked.filter(F.col("__p__.keep")).drop("__p__")
+        ignored = ~F.col("__p__.keep") & F.col("__p__.err").isNull()
+        errors = F.col("__p__.err").isNotNull()
         rejected = tag_rejects(
-            marked.filter(~F.col("__p__.keep") & F.col("__p__.err").isNull()).drop("__p__"),
+            marked.filter(ignored).drop("__p__"),
             RejectionCategory.IGNORE_ROW,
             "filtered out",
             step,
         )
         errored = tag_rejects(
-            marked.filter(F.col("__p__.err").isNotNull()).drop("__p__"),
+            marked.filter(errors).drop("__p__"),
             RejectionCategory.SCRIPT_ERROR,
             "closure raised",
             step,
+        )
+        kept = (
+            self._observe(
+                marked, step,
+                {RejectionCategory.IGNORE_ROW.value: ignored,
+                 RejectionCategory.SCRIPT_ERROR.value: errors},
+                [rejected, errored],
+            )
+            .filter(F.col("__p__.keep"))
+            .drop("__p__")
         )
         out = self._next(kept, [rejected, errored], keep_size_hint=True)
         out._step_timers.append((step, timer))
@@ -1641,12 +1699,19 @@ class Pipeline:
         """
         w = Window.partitionBy(*[F.col(c) for c in columns]).orderBy(self._order_col())
         marked = self.df.withColumn("__rn__", F.row_number().over(w))
-        kept = marked.filter(F.col("__rn__") == 1).drop("__rn__")
+        step = f"unique({','.join(columns)})"
         rejected = tag_rejects(
             marked.filter(F.col("__rn__") > 1).drop("__rn__"),
             RejectionCategory.IGNORE_ROW,
             f"duplicate {','.join(columns)}",
-            f"unique({','.join(columns)})",
+            step,
+        )
+        kept = (
+            self._observe(marked, step,
+                          {RejectionCategory.IGNORE_ROW.value: F.col("__rn__") > 1},
+                          [rejected])
+            .filter(F.col("__rn__") == 1)
+            .drop("__rn__")
         )
         return self._next(kept, [rejected], keep_size_hint=True)
 
@@ -1673,19 +1738,23 @@ class Pipeline:
         halt=True mirrors HaltPipelineException: limit only (Spark's
         CollectLimit / TakeOrdered early-terminates). halt=False
         additionally accounts the remainder as IGNORE_ROW rejects.
+
+        A limit stops reading its input early, so reject steps before it
+        are counted by scanning their branches (a reject-accounting
+        barrier, see ``go``).
         """
         ordered = ROW_ORDER in self.df.columns
         base = self.df.orderBy(ROW_ORDER) if ordered else self.df
         kept = base.limit(n)
         if halt:
-            return self._next(kept, keep_size_hint=True)
+            return self._next(kept, keep_size_hint=True, barrier=True)
         rejected = tag_rejects(
             base.offset(n),
             RejectionCategory.IGNORE_ROW,
             f"row number > {n}",
             f"limit({n})",
         )
-        return self._next(kept, [rejected], keep_size_hint=True)
+        return self._next(kept, [rejected], keep_size_hint=True, barrier=True)
 
     # ----------------------------------------------------- generic steps
 
@@ -1780,11 +1849,19 @@ class Pipeline:
                 yield pd.DataFrame(out_rows, columns=full_names, dtype=object)
 
         marked = _map_in_pandas_exact(self.df, _run, full)
-        kept = marked.filter(F.col("__cat__").isNull()).drop("__cat__", "__reason__")
         rejected = (
             marked.filter(F.col("__cat__").isNotNull())
             .withColumnsRenamed({"__cat__": REJECT_CATEGORY, "__reason__": REJECT_REASON})
             .withColumn(REJECT_STEP, F.lit(step))
+        )
+        kept = (
+            self._observe(
+                marked, step,
+                {c.value: F.col("__cat__") == c.value for c in RejectionCategory},
+                [rejected],
+            )
+            .filter(F.col("__cat__").isNull())
+            .drop("__cat__", "__reason__")
         )
         out = self._next(kept, [rejected])
         out._step_timers.append((step, timer))
@@ -1851,14 +1928,7 @@ class Pipeline:
         plan is identical to having called ``add_step`` first.
         """
         origin = self._origin or self
-        p = origin.add_step(name, fn, schema=schema)
-        for kind, args, kwargs in self._ops:
-            if kind == "__grouped":
-                cols, sub, ga, gkw = args
-                p = getattr(p.group_by(*cols), sub)(*ga, **gkw)
-            else:
-                p = getattr(p, kind)(*args, **kwargs)
-        return p
+        return _replay(origin.add_step(name, fn, schema=schema), self._ops, reinfer=True)
 
     # ---------------------------------------------------- column transforms
 
@@ -1896,16 +1966,21 @@ class Pipeline:
                 "__f__",
                 _field(F.struct(*cols, *_nan_flag_cols(self.df, cols))),
             )
-            kept = (
-                marked.filter(F.col("__f__.err").isNull())
-                .withColumn(name, F.col("__f__.value"))
-                .drop("__f__")
-            )
+            step = f"add_field({name})"
+            errors = F.col("__f__.err").isNotNull()
             errored = tag_rejects(
-                marked.filter(F.col("__f__.err").isNotNull()).drop("__f__"),
+                marked.filter(errors).drop("__f__"),
                 RejectionCategory.SCRIPT_ERROR,
                 "closure raised",
-                f"add_field({name})",
+                step,
+            )
+            kept = (
+                self._observe(marked, step,
+                              {RejectionCategory.SCRIPT_ERROR.value: errors},
+                              [errored])
+                .filter(F.col("__f__.err").isNull())
+                .withColumn(name, F.col("__f__.value"))
+                .drop("__f__")
             )
             return self._next(kept, [errored])
         else:
@@ -2018,16 +2093,19 @@ class Pipeline:
         had_value = src.isNotNull() & (src.cast("string") != "")
         marked = self.df.withColumn("__parsed__", parsed)
         bad = had_value & F.col("__parsed__").isNull()
-        kept = (
-            marked.filter(~bad)
-            .withColumn(column, F.col("__parsed__"))
-            .drop("__parsed__")
-        )
+        step = f"as{type_name}({column})"
         rejected = tag_rejects(
             marked.filter(bad).drop("__parsed__"),
             RejectionCategory.INVALID_FORMAT,
             f"Could not parse value as {type_name}",
-            f"as{type_name}({column})",
+            step,
+        )
+        kept = (
+            self._observe(marked, step,
+                          {RejectionCategory.INVALID_FORMAT.value: bad}, [rejected])
+            .filter(~bad)
+            .withColumn(column, F.col("__parsed__"))
+            .drop("__parsed__")
         )
         return self._next(kept, [rejected])
 
@@ -2367,7 +2445,11 @@ class Pipeline:
         determinism class as the unstamped-source fallback stamp: stable
         for a fixed range-boundary configuration (boundaries are
         computed from a fixed per-plan seed, so re-evaluations within a
-        session agree)."""
+        session agree).
+
+        The global sort samples its input for range boundaries in a
+        separate job, which would count an Observation below it twice,
+        so a sort is a reject-accounting barrier (see ``go``)."""
         exprs = []
         for c in columns:
             if isinstance(c, tuple):
@@ -2412,11 +2494,12 @@ class Pipeline:
             out = self._next(
                 ordered.limit(0) if not downstream else ordered,
                 keep_size_hint=True,
+                barrier=True,
             )
             out._hooks.setdefault("deferred", [])
             out._hooks["deferred"] = list(out._hooks["deferred"]) + [_write_sorted]
             return out
-        return self._next(ordered, keep_size_hint=True)
+        return self._next(ordered, keep_size_hint=True, barrier=True)
 
     def _fill_updates(self, w: Any, skip: Iterable[str]) -> dict:
         """Fill expressions for every payload column (Groovy-falsy rule
@@ -2536,7 +2619,8 @@ class Pipeline:
         filled = with_gid.withColumns(self._fill_updates(w_fill, ())).drop(
             "__gid__", *extra
         )
-        return self._next(filled)
+        # the consistency checkpoint hides the input plan: a barrier
+        return self._next(filled, barrier=True)
 
     def flatten_window(
         self,
@@ -2571,7 +2655,8 @@ class Pipeline:
         result = _apply_in_pandas_exact(
             with_gid.groupBy("__gid__"), _apply, out_schema
         )
-        return self._next(result)
+        # the consistency checkpoint hides the input plan: a barrier
+        return self._next(result, barrier=True)
 
     def inject(self, column: str, alias: str | None = None) -> "Pipeline":
         """Explode an array column into one row per element
@@ -2658,7 +2743,9 @@ class Pipeline:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
-        return self._next(out, extra_rejects)
+        # collected at build time, and the output plan no longer reads
+        # the input: a barrier
+        return self._next(out, extra_rejects, barrier=True)
 
     # ------------------------------------------------------------- grouping
 
@@ -2814,8 +2901,9 @@ class Pipeline:
             cond = e if cond is None else cond & e
 
         joined = self.df.join(right_clean, cond, "left").drop(*renames.values())
+        # AQE may prune a join input it finds empty at runtime: a barrier
         if left:
-            return self._next(joined.drop("__matched__"))
+            return self._next(joined.drop("__matched__"), barrier=True)
         kept = joined.filter(F.col("__matched__")).drop("__matched__")
         rejected = tag_rejects(
             joined.filter(F.col("__matched__").isNull())
@@ -2824,7 +2912,7 @@ class Pipeline:
             f"Could not join on {lkeys}",
             f"join({lkeys})",
         )
-        return self._next(kept, [rejected])
+        return self._next(kept, [rejected], barrier=True)
 
     def intersect(
         self, other: "Pipeline | DataFrame", on: str | Iterable[str] | Mapping[str, str]
@@ -2855,7 +2943,7 @@ class Pipeline:
             .withColumn("included", F.coalesce(F.col("__included__"), F.lit(False)))
             .drop("__included__", *[f"__ik_{i}__" for i in range(len(pairs))])
         )
-        return self._next(joined)
+        return self._next(joined, barrier=True)
 
     def concat(self, other: "Pipeline | DataFrame") -> "Pipeline":
         """Union keeping each side's own columns, null-filling the gaps
@@ -2908,8 +2996,13 @@ class Pipeline:
     # ----------------------------------------------------------- lifecycle
 
     def apply(self, fn: Callable[["Pipeline"], "Pipeline"]) -> "Pipeline":
-        """Composition helper (Pipeline.groovy:1129-1132)."""
-        return fn(self)
+        """Composition helper (Pipeline.groovy:1129-1132). ``fn`` may do
+        anything to the plan, so its result is a reject-accounting
+        barrier."""
+        out = fn(self)
+        if isinstance(out, Pipeline) and out is not self:
+            out._barrier = True
+        return out
 
     def after(self, hook: Callable[[], Any]) -> "Pipeline":
         """Callback after the action completes (Pipeline.groovy:153-157)."""
@@ -2931,48 +3024,53 @@ class Pipeline:
         return union_rejects(self._rejects)
 
     def persist(self) -> "Pipeline":
-        return self._next(self.df.persist())
+        # a barrier, so the accounted plan reads the cached prefix as is
+        return self._next(self.df.persist(), barrier=True)
 
     def go(self) -> LoadStatistic:
         """Execute and return LoadStatistic (Pipeline.groovy:1333-1342).
 
-        SINGLE action: the kept stream (tagged ``__kept__``) and every
-        reject branch are projected down to (category, step) and unioned,
-        then one groupBy-count aggregate yields loaded + per-category×step
-        reject counts together. Each branch's subtree stays column-pruned
-        to its grouping tags (scans read nothing but what its own filters
-        need), and shared shuffle subtrees are deduplicated by Spark's
-        exchange reuse — this is the one-pass accounting design from
-        SURVEY §3.3 without a second scan of the kept rows for counting.
+        One pass counts every reject step, as gratum's rows leave for
+        the rejections pipeline inside the pass that loads the kept rows
+        (Pipeline.groovy:1350-1358). The action runs the ACCOUNTED plan
+        (see ``_accounted``): the kept plan with an Observation counting
+        each reject step's rejects on the kept path. ``go()`` on its own
+        runs that plan once, tagging kept rows for the loaded count;
+        after a file sink (``save``/``json``/``parquet``/``jdbc``) the
+        write already ran it, so ``go()`` launches no Spark job.
+
+        Two kinds of reject are still counted by scanning their lazy
+        branch (in ``go()``'s action, alongside the kept rows when there
+        was no save): rejects upstream of a barrier — an operator that
+        can stop, skip, re-read or hide the reading of its input:
+        ``limit``, ``sort``, ``join``, ``intersect``, ``persist``,
+        ``exchange``, ``apply``, and the checkpointed run ids of
+        ``flatten_window`` and ``fill_down_by``'s decider form — and
+        rejects carried in from another pipeline (``concat`` and
+        ``exchange`` inputs, ``Pipeline(..., rejects=...)``). A step
+        whose Observation reports nothing — AQE pruned its subtree,
+        e.g. an aggregate over input found empty at runtime — is counted
+        by scanning its branch in a further action.
         """
         start = now_ms()
         self._run_deferred()
-        # accumulators persist across actions — snapshot so a repeated
-        # go() reports only THIS run's closure time
-        timer_base = {id(acc): acc.value for _, acc in self._step_timers}
-        loaded = 0
-        rejections: dict[str, dict[str, int]] = {}
-        if self._loaded_override is not None:
-            # a file save already counted its written rows via Observation —
-            # don't execute anything again for the kept-row count
-            loaded = self._loaded_override
-            counts_df = None
+        tally = self._tally
+        if tally is not None:
+            # a file save's write counted the rows; scan what it could not
+            timers, timings = tally.timers, dict(tally.step_timings)
+            before = _timer_values(timers)
+            loaded, rejections = tally.loaded, _merge_counts({}, tally.rejections)
+            _merge_counts(rejections, _count_tags(tally.pending)[1])
+            reported = self
         else:
-            counted = self._count_source if self._count_source is not None else self.df
-            counts_df = counted.select(
-                F.lit("__kept__").alias(REJECT_CATEGORY), F.lit("").alias(REJECT_STEP)
-            )
-        for r in self._rejects:
-            tags = r.select(REJECT_CATEGORY, REJECT_STEP)
-            counts_df = tags if counts_df is None else counts_df.unionAll(tags)
-        if counts_df is not None:
-            for row in counts_df.groupBy(REJECT_CATEGORY, REJECT_STEP).count().collect():
-                if row[REJECT_CATEGORY] == "__kept__":
-                    loaded = row["count"]
-                else:
-                    rejections.setdefault(row[REJECT_CATEGORY], {})[row[REJECT_STEP]] = row[
-                        "count"
-                    ]
+            acc = (self._count_source or self)._accounted()
+            timers, timings = acc._step_timers, {}
+            before = _timer_values(timers)
+            loaded, rejections = _count_tags(acc._unobserved(), kept=acc.df)
+            observed, missed = acc._observed_rejections()
+            _merge_counts(rejections, observed)
+            _merge_counts(rejections, _count_tags(missed)[1])
+            reported = acc
         if loaded == 0:
             from .rejections import MAX_ERROR_THRESHOLD, PipelineAbortException
 
@@ -2982,7 +3080,7 @@ class Pipeline:
                     f"{script_errors} SCRIPT_ERROR rejections with 0 loaded rows "
                     f"(threshold {MAX_ERROR_THRESHOLD})"
                 )
-        self._report_progress()
+        reported._report_progress()
         rej = self.rejections_df()
         for side, configure in self._hooks["branches"]:
             configured = configure(side)
@@ -2993,13 +3091,62 @@ class Pipeline:
                 configure(Pipeline(rej, f"{self.name}-rejections"))
         for hook in self._hooks["after"]:
             hook()
-        step_timings: dict[str, float] = {}
-        for step_name, acc in self._step_timers:
-            delta = acc.value - timer_base[id(acc)]
-            step_timings[step_name] = step_timings.get(step_name, 0.0) + delta
-        return LoadStatistic(
-            self.name, loaded, start, now_ms(), rejections, step_timings
-        )
+        for step_name, ms in _timer_ms(timers, before).items():
+            timings[step_name] = timings.get(step_name, 0.0) + ms
+        return LoadStatistic(self.name, loaded, start, now_ms(), rejections, timings)
+
+    def _accounted(self) -> "Pipeline":
+        """This pipeline rebuilt for one-pass reject accounting.
+
+        Replays the recorded operator chain from the latest barrier (or
+        the origin) with accounting on: every reject step after that
+        point adds an Observation on the kept path (``_observe``). Only
+        actions run this plan — ``p.df`` is untouched, so its filters
+        still push down. Barrier outputs are reused, not replayed, so a
+        persisted prefix still hits the cache and build-time jobs
+        (exchange's collect) do not repeat. If the chain does not replay
+        (a Column bound to an intermediate DataFrame, say), the plan is
+        this pipeline's own, and every reject branch is scanned."""
+        from pyspark.errors import AnalysisException
+
+        base = self._anchor or self._origin or self
+        start = base._next(base.df, keep_size_hint=True)
+        start._acct = []
+        try:
+            return _replay(start, self._ops[len(base._ops):])
+        except AnalysisException:
+            out = self._next(self.df, keep_size_hint=True)
+            out._acct = []
+            return out
+
+    def _unobserved(self) -> list[DataFrame]:
+        """The reject branches no Observation of this accounted pipeline
+        counts."""
+        covered = {id(b) for _, _, branches in self._acct or [] for b in branches}
+        return [r for r in self._rejects if id(r) not in covered]
+
+    def _observed_rejections(self) -> tuple[dict[str, dict[str, int]], list[DataFrame]]:
+        """After the accounted plan ran: the reject counts its
+        Observations reported, and the branches of the steps whose
+        Observation reported nothing (to be counted by scan)."""
+        counts: dict[str, dict[str, int]] = {}
+        missed: list[DataFrame] = []
+        if self._acct:
+            from py4j.protocol import Py4JError
+
+            # Observations complete on the listener bus; once it has
+            # drained, one that is still empty never fires for this action
+            try:
+                self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            except Py4JError:  # timed out: a late Observation costs a scan
+                pass
+        for obs, step, branches in self._acct or []:
+            row = obs._jo.getRowOrEmpty()
+            if row.isEmpty() or row.get().length() == 0:
+                missed.extend(branches)
+                continue
+            _merge_counts(counts, {cat: {step: n} for cat, n in obs.get.items() if n})
+        return counts, missed
 
     @staticmethod
     def go_stats_script_errors(rejections: dict[str, dict[str, int]]) -> int:
@@ -3027,29 +3174,40 @@ class Pipeline:
             df = df.select(*columns)
         return df
 
-    def _observed_for_save(self, columns: Iterable[str] | None = None):
-        """The outgoing write plan plus an Observation riding on it, so the
-        saved-row count is a byproduct of the write — go() on the result
-        pipeline never re-executes the parent plan just to count."""
+    def _accounted_write(self, columns: Iterable[str] | None = None):
+        """The plan a file sink writes — the accounted plan (see ``go``)
+        with the written-row count observed as well — and a function
+        that builds the 1-row result pipeline once the write has run.
+        The result carries the write's counts, so go() on it never
+        re-executes the parent plan."""
         from pyspark.sql import Observation
 
-        obs = Observation()
-        return (
-            self._clean_df(columns).observe(obs, F.count(F.lit(1)).alias("rows")),
-            obs,
-        )
+        acc = self._accounted()
+        rows = Observation()
+        before = _timer_values(acc._step_timers)
 
-    def _save_result(self, path: str, obs) -> "Pipeline":
-        result = self.spark.createDataFrame([(path,)], "filename string")
-        out = Pipeline(result, f"{self.name}-saved", self._rejects, self._hooks)
-        if self._loaded_override is not None:
-            # chained saves keep reporting the ORIGINAL parent's count
-            out._loaded_override = self._loaded_override
-        elif self._count_source is not None:
-            out._count_source = self._count_source
-        else:
-            out._loaded_override = int(obs.get["rows"])
-        return out
+        def result(path: str) -> "Pipeline":
+            hooks = {**self._hooks, "progress": acc._hooks.get("progress", [])}
+            df = self.spark.createDataFrame([(path,)], "filename string")
+            out = Pipeline(df, f"{self.name}-saved", self._rejects, hooks)
+            if self._tally is not None:
+                # chained saves keep reporting the ORIGINAL parent's count
+                out._tally = self._tally
+            elif self._count_source is not None:
+                out._count_source = self._count_source
+            else:
+                observed, missed = acc._observed_rejections()
+                out._tally = _Tally(
+                    int(rows.get["rows"]),
+                    observed,
+                    acc._unobserved() + missed,
+                    _timer_ms(acc._step_timers, before),
+                    acc._step_timers,
+                )
+            return out
+
+        written = acc._clean_df(columns).observe(rows, F.count(F.lit(1)).alias("rows"))
+        return written, result
 
     def save(
         self,
@@ -3078,13 +3236,11 @@ class Pipeline:
             out = Pipeline(result, sink.name, self._rejects, self._hooks)
             # arbitrary user attach() — the consumed count isn't observable
             # from out here, so go() counts the parent plan (documented cost)
-            out._loaded_override = self._loaded_override
-            if out._loaded_override is None:
-                out._count_source = (
-                    self._count_source if self._count_source is not None else self.df
-                )
+            out._tally = self._tally
+            if out._tally is None:
+                out._count_source = self._count_source or self
             return out
-        df, obs = self._observed_for_save(columns)
+        df, result = self._accounted_write(columns)
         (
             df.write.mode("overwrite")
             .option("header", header)
@@ -3102,7 +3258,7 @@ class Pipeline:
             .option("ignoreTrailingWhiteSpace", "false")
             .csv(path)
         )
-        return self._save_result(path, obs)
+        return result(path)
 
     def json(self, path: str, columns: Iterable[str] | None = None) -> "Pipeline":
         """JSON-array sink (sink/JsonSink.groovy:9-83) — written as JSONL
@@ -3115,9 +3271,9 @@ class Pipeline:
         to ignoreNullFields=true — under which an all-null column
         vanishes from the files entirely and a read-back loses the field
         (caught by the jsonl_roundtrip fuzz at seed 1307, r13)."""
-        df, obs = self._observed_for_save(columns)
+        df, result = self._accounted_write(columns)
         df.write.mode("overwrite").option("ignoreNullFields", "false").json(path)
-        return self._save_result(path, obs)
+        return result(path)
 
     def jsonl(self, path: str, columns: Iterable[str] | None = None) -> "Pipeline":
         """JSONL sink (Pipeline.groovy:864-877) — native Spark json writer."""
@@ -3138,7 +3294,7 @@ class Pipeline:
         against the database (32 executor partitions = 32 concurrent
         writers). Returns the 1-row result pipeline like the other
         sinks."""
-        df, obs = self._observed_for_save()
+        df, result = self._accounted_write()
         w = (
             df.write.format("jdbc")
             .option("url", url)
@@ -3149,7 +3305,7 @@ class Pipeline:
         for k, v in (properties or {}).items():
             w = w.option(k, v)
         w.save()
-        return self._save_result(table, obs)
+        return result(table)
 
     def parquet(
         self,
@@ -3168,7 +3324,7 @@ class Pipeline:
         row-group min/max statistics so point/range predicates on those
         columns prune row groups at read time (no extra shuffle — it's
         a partition-local sort)."""
-        df, obs = self._observed_for_save()
+        df, result = self._accounted_write()
         if sort_by:
             df = df.sortWithinPartitions(*list(sort_by))
         w = df.write.mode("overwrite")
@@ -3177,7 +3333,7 @@ class Pipeline:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        return self._save_result(path, obs)
+        return result(path)
 
     # ------------------------------------------------------------ debugging
 
@@ -3329,6 +3485,67 @@ def _infer_py_type(v: Any) -> DataType:
     return StringType()
 
 
+@dataclass
+class _Tally:
+    """What a file save's write counted, kept on its result pipeline for
+    ``go()``: the rows written, the rejects its Observations reported,
+    the reject branches still to scan, and the closure time of the
+    write (plus the timers, to time the scans)."""
+
+    loaded: int
+    rejections: dict[str, dict[str, int]]
+    pending: list[DataFrame]
+    step_timings: dict[str, float]
+    timers: list[tuple[str, Any]]
+
+
+def _merge_counts(
+    into: dict[str, dict[str, int]], more: Mapping[str, Mapping[str, int]]
+) -> dict[str, dict[str, int]]:
+    """Add {category: {step: count}} counts into ``into``."""
+    for cat, by_step in more.items():
+        mine = into.setdefault(cat, {})
+        for step, n in by_step.items():
+            mine[step] = mine.get(step, 0) + n
+    return into
+
+
+def _count_tags(
+    branches: list[DataFrame], kept: DataFrame | None = None
+) -> tuple[int, dict[str, dict[str, int]]]:
+    """(kept rows, {category: {step: count}}) over the kept plan and the
+    reject branches, in one groupBy-count action — none when there is
+    nothing to count."""
+    tags = [r.select(REJECT_CATEGORY, REJECT_STEP) for r in branches]
+    if kept is not None:
+        tags.insert(0, kept.select(
+            F.lit("__kept__").alias(REJECT_CATEGORY), F.lit("").alias(REJECT_STEP)
+        ))
+    if not tags:
+        return 0, {}
+    counts_df = functools.reduce(DataFrame.unionAll, tags)
+    loaded, rejections = 0, {}
+    for row in counts_df.groupBy(REJECT_CATEGORY, REJECT_STEP).count().collect():
+        if row[REJECT_CATEGORY] == "__kept__":
+            loaded = row["count"]
+        else:
+            _merge_counts(rejections, {row[REJECT_CATEGORY]: {row[REJECT_STEP]: row["count"]}})
+    return loaded, rejections
+
+
+def _timer_values(timers: list[tuple[str, Any]]) -> dict[int, float]:
+    # accumulators persist across actions — snapshot so a run reports
+    # only its own closure time
+    return {id(acc): acc.value for _, acc in timers}
+
+
+def _timer_ms(timers: list[tuple[str, Any]], before: dict[int, float]) -> dict[str, float]:
+    out: dict[str, float] = {}
+    for step, acc in timers:
+        out[step] = out.get(step, 0.0) + acc.value - before[id(acc)]
+    return out
+
+
 def _schema_fields(schema: StructType | str):
     if isinstance(schema, StructType):
         return schema.fields
@@ -3338,15 +3555,38 @@ def _schema_fields(schema: StructType | str):
 
 
 # ---------------------------------------------------------------------------
-# Operator recording for prepend_step
+# Operator recording for prepend_step and reject accounting
 #
 # gratum's prependStep inserts a Step at position 0 of a mutable chain
 # (Pipeline.groovy:119-126). A Catalyst plan is immutable, so instead every
 # public operator records (name, args, kwargs) on the Pipeline it returns;
-# prepend_step replays that chain on top of (origin source → new step).
-# Eager actions (go/start/save/json/jsonl/parquet/print_row) are NOT
-# recorded: a write that already happened can't retroactively change.
+# prepend_step replays that chain on top of (origin source → new step),
+# and actions replay it from the latest barrier with reject accounting on
+# (Pipeline._accounted). Eager actions (go/start/save/json/jsonl/parquet/
+# print_row) are NOT recorded: a write that already happened can't
+# retroactively change.
 # ---------------------------------------------------------------------------
+
+
+class _InferredSchema(StructType):
+    """An add_step schema that was inferred, not given: replayed on the
+    same input it saves the probe job; prepend_step infers it again."""
+
+
+def _replay(
+    p: Pipeline, ops: list[tuple[str, tuple, dict]], reinfer: bool = False
+) -> Pipeline:
+    """Apply recorded operators to ``p``, in order."""
+    for kind, args, kwargs in ops:
+        if kind == "__grouped":
+            cols, sub, ga, gkw = args
+            p = getattr(p.group_by(*cols), sub)(*ga, **gkw)
+            continue
+        if reinfer and isinstance(kwargs.get("schema"), _InferredSchema):
+            kwargs = {**kwargs, "schema": None}
+        p = getattr(p, kind)(*args, **kwargs)
+    return p
+
 
 _REPLAYED = (
     "with_row_order", "filter", "trim", "unique", "drop_duplicates", "limit",
@@ -3364,8 +3604,13 @@ def _recorded(name: str, orig):
     def inner(self: Pipeline, *args, **kwargs):
         out = orig(self, *args, **kwargs)
         if isinstance(out, Pipeline) and out is not self:
+            if name == "add_step" and kwargs.get("schema") is None:
+                kwargs = {**kwargs, "schema": _InferredSchema(
+                    [f for f in out.df.schema.fields if f.name != ROW_ORDER]
+                )}
             out._origin = self._origin or self
             out._ops = self._ops + [(name, args, kwargs)]
+            out._anchor = out if out._barrier else self._anchor
         return out
 
     return inner
@@ -3381,6 +3626,7 @@ def _grouped_recorded(name: str, orig):
             out._ops = parent._ops + [
                 ("__grouped", (tuple(self.columns), name, args, kwargs), {})
             ]
+            out._anchor = parent._anchor
         return out
 
     return inner

@@ -10,11 +10,14 @@ RejectionCategory.groovy:9-17, LoadStatistic.groovy:12-163)
 
 Spark design: each rejecting operator *splits* the lazy plan — main
 continues as ``df.filter(pred)``, and ``df.filter(~pred)`` plus the
-rejection metadata columns is appended to the pipeline's reject list.
-Catalyst pushes the (negated) predicate to the scan on both branches, so
-at 100 TB each reject branch is an independent pushed-down scan rather
-than a driver-side re-iteration; counts are computed in one union-all
-aggregate action at ``go()`` time.
+rejection metadata columns is appended to the pipeline's reject list
+(read by ``rejections_df()``, ``on_rejection`` and ``branch``). The
+counts come from the pass that loads the kept rows: actions run the
+plan rebuilt with an Observation per reject step on the kept path, so
+``go()`` after a file save launches no Spark job, and ``go()`` alone
+runs one action. Only rejects upstream of a barrier (limit, join, ...)
+or carried in from another pipeline are counted by scanning their
+branch (see ``Pipeline.go``).
 """
 
 from __future__ import annotations
@@ -95,11 +98,14 @@ class LoadStatistic:
 
     Mirrors gratum's LoadStatistic (LoadStatistic.groovy:12-163). Per-step
     wall timings exist only for Python-closure steps (add_step, closure
-    filters), measured executor-side via accumulators; expression-only
-    steps fuse into whole-stage codegen and have no separable time. A
-    step's reported ms is the SUM over every plan branch that executed it
-    (kept + reject branches may each run the step), so totals are
-    APPROXIMATE and can exceed the action's wall-clock.
+    filters, closure add_field), measured executor-side via accumulators
+    of the plan that actually ran — the write of a file save plus
+    ``go()``'s own actions; expression-only steps fuse into whole-stage
+    codegen and have no separable time. A closure step counted on the
+    kept path runs once per row. One upstream of a reject-accounting
+    barrier also runs in the scans of later reject branches, and its ms
+    is the SUM over those runs, so it can exceed its share of the
+    wall-clock; executor time summed over parallel tasks can too.
     """
 
     name: str

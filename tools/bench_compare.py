@@ -1,13 +1,11 @@
-"""Compare two bench JSONs with calibration normalization.
+"""Compare the per-query timings of two bench JSONs.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json
 
 Accepts either the raw one-line output of bench.py or the driver's
-BENCH_r{N}.json wrapper ({"parsed": {...}}). When both files carry a
-``calibration`` block (bench.py emits it since r5), per-query ratios are
-also shown normalized by the host-speed ratio (mean of the scan and CPU
-calibration ratios) — a normalized ratio near 1.0 means "the host moved,
-not the plan".
+BENCH_r{N}.json wrapper ({"parsed": {...}}). Ratios are raw new/old
+wall times: compare only runs made on the same host under the same
+conditions (host-speed normalization was retired in r11, BASELINE.md).
 """
 
 from __future__ import annotations
@@ -22,59 +20,25 @@ def load(path: str) -> dict:
     return d.get("parsed", d)
 
 
-def host_factor(old: dict, new: dict) -> float | None:
-    co, cn = old.get("calibration"), new.get("calibration")
-    if not (co and cn):
-        return None
-
-    def mid(c: dict, key: str) -> float:
-        # average the start/end calibration passes
-        return (c["start"][key] + c["end"][key]) / 2.0
-
-    ratios = [
-        mid(cn, k) / mid(co, k)
-        for k in ("lineitem_count_sec", "cpu_loop_sec")
-        if mid(co, k) > 0
-    ]
-    return sum(ratios) / len(ratios) if ratios else None
-
-
 def main() -> int:
     if len(sys.argv) != 3:
         print(__doc__)
         return 2
     old, new = load(sys.argv[1]), load(sys.argv[2])
-    factor = host_factor(old, new)
     qo, qn = old["queries"], new["queries"]
-    common = sorted(set(qo) & set(qn))
     print(f"total: {old['value']} -> {new['value']} "
-          f"(raw {new['value'] / old['value']:.2f}x)")
-    if factor is not None:
-        print(f"host calibration factor: {factor:.2f}x "
-              f"(normalized total {new['value'] / old['value'] / factor:.2f}x)")
-    else:
-        print("host calibration factor: n/a (one side lacks calibration)")
-    header = f"{'query':<28}{'old':>8}{'new':>8}{'raw x':>8}"
-    if factor is not None:
-        header += f"{'norm x':>8}"
-    print(header)
+          f"({new['value'] / old['value']:.2f}x)")
+    print(f"{'query':<28}{'old':>8}{'new':>8}{'x':>8}")
     flagged = []
-    for q in common:
-        raw = qn[q] / qo[q]
-        line = f"{q:<28}{qo[q]:>8.3f}{qn[q]:>8.3f}{raw:>8.2f}"
-        if factor is not None:
-            norm = raw / factor
-            line += f"{norm:>8.2f}"
-            if norm > 1.5:
-                flagged.append((q, norm))
-        print(line)
-    if factor is not None:
-        if flagged:
-            print("\nqueries >1.5x after host normalization (investigate plans):")
-            for q, n in flagged:
-                print(f"  {q}: {n:.2f}x")
-        else:
-            print("\nno query regressed >1.5x after host normalization")
+    for q in sorted(set(qo) & set(qn)):
+        ratio = qn[q] / qo[q]
+        print(f"{q:<28}{qo[q]:>8.3f}{qn[q]:>8.3f}{ratio:>8.2f}")
+        if ratio > 1.5:
+            flagged.append((q, ratio))
+    if flagged:
+        print("\nqueries >1.5x slower (investigate plans):")
+        for q, r in flagged:
+            print(f"  {q}: {r:.2f}x")
     return 0
 
 
